@@ -444,29 +444,43 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iters: int = 50,
 ) -> DataFrame:
     """Collapse near-dup PAIRS into clusters: iterative min-label
-    propagation (the standard large-graph connected-components shape —
-    each iteration is one shuffle join of edge-sized data + a map-side
-    combinable min; iterations ≤ graph diameter, convergence checked
-    with a cheap aggregate). Returns (doc_id, rep_id) for every node
-    that appears in a pair; rep_id = the component's minimum doc id —
-    the keep-the-smallest-id dedup policy."""
+    propagation (the standard large-graph connected-components shape).
+    Returns (doc_id, rep_id) for every node that appears in a pair;
+    rep_id = the component's minimum doc id — the keep-the-smallest-id
+    dedup policy. Works for any orderable id type (numeric doc ids and
+    string URLs alike).
+
+    The edge table is symmetric with a self-loop per node, so one
+    iteration is one shuffle join of edge-sized data plus a map-side
+    combinable min that yields both the node's new label (min over
+    itself and its neighbours) and whether it changed. Labels only
+    decrease, so the loop runs until none changes: at most diameter + 1
+    iterations, and no cap that could stop short of the minimum.
+
+    Lineage is cut as in ``linkgraph.pagerank``: the edge table (which
+    drops the minhash/Jaccard lineage behind ``pairs``) and every
+    iteration's labels are eager local checkpoints, so each iteration
+    is planned over leaf-sized inputs and its driver cost stays
+    constant. The convergence probe reads the checkpointed ``changed``
+    flags. The result is a checkpointed leaf: nothing to unpersist."""
+    def _edge(s, d):
+        return F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+        pairs.select(F.inline(F.array(
+            _edge(a_col, b_col), _edge(b_col, a_col),
+            _edge(a_col, a_col), _edge(b_col, b_col),
+        )))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
-        "rep_id", F.col("doc_id")
-    ).persist()
-    for _ in range(max_iters):
-        # each node takes the min of its own label and its neighbours'
-        prop = (
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("doc_id"), F.col("dst").alias("rep_id")
+    )
+    while True:
+        labels = (
             edges.join(
                 labels.select(
                     F.col("doc_id").alias("dst"),
@@ -475,42 +489,17 @@ def connected_components(
                 "dst",
             )
             .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("nbr_rep").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(prop, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("rep_id"), F.coalesce(F.col("nbr_min"), F.col("rep_id"))
-                ).alias("rep_id"),
+            .agg(
+                F.min("nbr_rep").alias("rep_id"),
+                # the self-loop row carries the node's previous label
+                (F.min("nbr_rep") < F.max(
+                    F.when(F.col("src") == F.col("dst"), F.col("nbr_rep"))
+                )).alias("changed"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        # convergence: no node's label changed this iteration. The
-        # changed-row count works for ANY orderable id type (numeric
-        # doc ids AND string URLs — the old sum-witness cast strings
-        # to double and threw). Deliberately a FULL count, no
-        # limit(1): the full scan materializes every partition of
-        # new_labels' cache in this same job, so unpersisting the
-        # parent below never forces a recompute through unpersisted
-        # ancestors (a limited probe can stop early and leave the
-        # cache partial)
-        changed = (
-            new_labels.withColumnRenamed("rep_id", "new_rep")
-            .join(labels, "doc_id")
-            .filter(F.col("new_rep") != F.col("rep_id"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    # returned persisted (each iteration was materialized by the
-    # convergence aggregate, so lineage never re-runs); caller may
-    # unpersist when done
-    return labels
+        if labels.filter("changed").isEmpty():
+            return labels.select("doc_id", "rep_id")
 
 
 # ---------------------------------------------------------------- simhash

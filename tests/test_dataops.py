@@ -475,6 +475,29 @@ def test_connected_components_known_graph(spark):
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
+def test_connected_components_long_path_constant_plan(spark):
+    """A path graph needs one iteration per edge. Every iteration is
+    planned over checkpointed leaves, so the result's analyzed plan is
+    the same size for a 12-node path as for a 3-node one (an uncut
+    loop's plan roughly doubles per iteration), and every node of the
+    path still gets the component minimum — which sits at the far end
+    of the path, so the label must travel its whole length."""
+    def path(n):
+        ids = [f"n{i:02d}" for i in range(n)][::-1]
+        return spark.createDataFrame(
+            list(zip(ids, ids[1:])), "doc_a string, doc_b string"
+        )
+
+    def plan_nodes(df):
+        return len(df._jdf.queryExecution().analyzed().toString().splitlines())
+
+    short = dedup.connected_components(path(3))
+    long_ = dedup.connected_components(path(12))
+    out = {r["doc_id"]: r["rep_id"] for r in long_.collect()}
+    assert out == {f"n{i:02d}": "n00" for i in range(12)}
+    assert plan_nodes(long_) == plan_nodes(short)
+
+
 def test_ivf_assignment_no_window_over_product(spark):
     """Round-2 verdict item 5: centroid assignment must be a
     map-combinable max_by aggregate — a row_number window over the
